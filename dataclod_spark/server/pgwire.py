@@ -49,6 +49,7 @@ import hashlib
 import itertools
 import os
 import re
+import secrets
 import socket
 import socketserver
 import struct
@@ -489,6 +490,7 @@ class _Connection:
         # server ignores further messages until Sync, so a pipelining
         # client can never execute a stale portal from an earlier Bind
         self.skip_to_sync = False
+        self.secret_key = 0  # set by startup(), sent in BackendKeyData
 
     def _ext_error(self, code: str, message: str) -> None:
         """ErrorResponse inside the extended protocol ⇒ enter the
@@ -533,7 +535,9 @@ class _Connection:
             ("integer_datetimes", "on"),
         ):  # auth.rs:94-101
             self.p.send_parameter(k, v)
-        self.p.send(b"K", struct.pack("!ii", threading.get_ident() & 0x7FFFFFFF, 0))
+        # BackendKeyData: a CancelRequest must echo this pid/secret pair
+        self.secret_key = secrets.randbelow(0x7FFFFFFF) + 1  # non-zero int32
+        self.p.send(b"K", struct.pack("!ii", threading.get_ident() & 0x7FFFFFFF, self.secret_key))
         self.p.send_ready()
         return True
 

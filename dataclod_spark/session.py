@@ -144,10 +144,6 @@ def get_spark(
     return spark
 
 
-class _EmptyResult:
-    """Sentinel DataFrame-ish empty result for swallowed statements."""
-
-
 class _BBoxMeta:
     """Bbox SQL expressions registered for a view's geometry column."""
 

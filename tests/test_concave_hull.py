@@ -14,7 +14,7 @@ import pytest
 from dataclod_spark.geo.concave import concave_hull
 from dataclod_spark.geo.core import wkt_parse
 
-SLT = Path("/root/reference/src/sqllogictest/test_files/spatial_udf.slt").read_text()
+SLT_PATH = Path("/root/reference/src/sqllogictest/test_files/spatial_udf.slt")
 
 
 def _cycle_offset(expected, got):
@@ -29,7 +29,7 @@ def _cycle_offset(expected, got):
 
 
 def _case(pattern: str):
-    m = re.search(pattern, SLT, re.DOTALL)
+    m = re.search(pattern, SLT_PATH.read_text(), re.DOTALL)
     assert m, "slt golden not found"
     return m.group(1), wkt_parse(m.group(2).strip())
 

@@ -200,6 +200,21 @@ def test_server_parameters_sent(server):
     c.close()
 
 
+def test_backend_key_secrets_are_random(server):
+    """BackendKeyData carries a per-connection secret a CancelRequest must
+    echo; a constant (or zero) secret would let any client cancel any query."""
+    secrets = []
+    for _ in range(2):
+        c = MiniPgClient(server.port)
+        keys = [body for tag, body in c.login() if tag == b"K"]
+        c.close()
+        assert len(keys) == 1
+        _pid, secret = struct.unpack("!ii", keys[0])
+        secrets.append(secret)
+    assert 0 not in secrets
+    assert secrets[0] != secrets[1]
+
+
 def test_simple_select(client):
     cols, rows, tag = client.query("SELECT 1 + 1 AS two, 'hi' AS s, true AS b")
     assert cols == ["two", "s", "b"]
@@ -788,13 +803,13 @@ def test_slt_corpus_through_wire_matches_direct(client, engine):
     SQL run directly on the EngineSession and encoded with the server's
     own text codec — end-to-end proof the server path loses nothing
     (golden-value fidelity itself is covered by test_spatial_slt)."""
-    from test_spatial_slt import _RECORDS
+    from test_spatial_slt import load_records
 
     from dataclod_spark.server.pgwire import _text_encode
 
     mismatches = []
     checked = 0
-    for lineno, types, rowsort, sql, expected in _RECORDS:
+    for lineno, types, rowsort, sql, expected in load_records():
         try:
             direct = engine.sql(sql).collect()
         except Exception:
