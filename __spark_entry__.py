@@ -32,61 +32,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # list at the start of each round; entries left over from a prior round
 # only waste window slots (never produce a wrong check).
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # round 12: the r11 optimization round rewrote the computation path of
-    # ~60 queries but (r11 verdict, "What's wrong" #1) never declared them
-    # here, so the r11 driver window sampled a disjoint set.  These are the
-    # r11-rewritten queries with NO post-change driver row (r11 rewrite set
-    # minus the names already green in CORRECTNESS_r11) — they must jump to
-    # the front of the r12 window so the driver re-proves them.  r12's own
-    # rewrites are appended below as they land.
-    "q18_large_volume_customer",
-    "a8_exact_group_quantiles",
-    "x29_source_calibration",
-    "d6_ngram_jaccard",
-    "d15_ngram_containment",
-    "d17_lsh_recall",
-    "d19_shared_spans",
-    "x28_ngram_novelty",
-    "x31_benchmark_span_overlap",
-    "v2_knn_lsh",
-    "v3_knn_multiprobe",
-    "v4_knn_ivf",
-    "v14_ann_recall",
-    "m7_media_probe_pairs",
-    "m8_media_recall",
-    "st4_stream_interval_join",
-    "st12_stream_incremental_dedup",
-    "st17_stream_contamination",
-    "st18_stream_calibration",
-    "x24_bpe_merges",
-    "x26_bpe_encode_stats",
-    "x30_bpe_fertility_by_lang",
-    "g2_dwithin_count",
-    "g3_envelope_area_sum",
-    "st2_stream_tumbling",
-    "st3_stream_sliding",
-    "st5_stream_dedup",
-    "st8_stream_heavy_hitters",
-    # r12 rewrites (all value-identical by pin tests + strict sweeps, but
-    # the computation path changed): fused PQ/coarse Lloyd training
-    # (v11-v13), combined LSH index checkpoint + limit-probe connected
-    # components (d3/d7/d11/d12/d14/d16/d18/g23; d17/st12 listed above),
-    # one-window span labeling (st19; d19/x31 listed above), and the
-    # q1/q18/x1 scan-spread re-decisions (q18 listed above).
-    "v11_product_quantize",
-    "v12_pq_adc_topk",
-    "v13_ivf_adc_search",
-    "d3_lsh_pairs",
-    "d7_dedup_clusters",
-    "d11_dedup_reduction_report",
-    "d12_incremental_dedup",
-    "d14_line_dedup",
-    "d16_dedup_keep_best",
-    "d18_cluster_size_profile",
-    "g23_dbscan_clusters",
-    "st19_stream_span_decontamination",
-    "q1_pricing_summary",
-    "x1_token_stats",
+    # the grid spatial join builds every stage from one set of SQL
+    # fragments (operators/spatial_join.py): the DataFrame operator and
+    # the SQL dispatch routes (inner, chain, outer, EXISTS, and the
+    # literal-filter pushdown's exact verdict) changed construction
+    "g6_spatial_join_points_in_boxes",
+    "g7_dwithin_join",
+    "g8_rect_within_join",
+    "g9_sql_spatial_join",
+    "g11_sql_outer_spatial_join",
+    "g12_sql_cte_spatial_join",
+    "g14_sql_multi_join_spatial",
+    "g15_sql_exists_spatial",
+    "g16_sql_not_exists_spatial",
+    "g17_sql_region_query",
+    "g18_sql_chain_spatial_second",
+    "g19_sql_dwithin_join",
+    "g20_sql_distance_lt_join",
 )
 
 # The driver samples a bounded window (50 in r2-r5) of the registry in

@@ -3,34 +3,49 @@
 Re-expresses the reference's out-of-core SpatialJoinExec
 (``spatial/src/join/exec.rs:32-131``: build-side R-tree index, grid/KDB
 spatial partitioning, candidate refinement, outer-join completion) in
-Spark's execution model:
+Spark's execution model.  The grid join has two entry points: the
+DataFrame operator :func:`spatial_join` and the SQL dispatch
+(``plans/spatial_dispatch.py``, the analogue of the reference routing
+``JOIN … ON ST_*`` into the same SpatialJoinExec, ``optimizer.rs:33-113``).
+Every stage is defined ONCE in this module — as a SQL fragment over column
+references the caller passes in, or as a driver-side helper — and both
+entry points use that definition: the operator applies each fragment with
+one ``selectExpr``/``F.expr`` over its flat ``l_*``/``r_*`` columns, the
+dispatch splices the same text over ``alias.__bb.*`` references (a parsed
+fragment and a Column build the same Catalyst expression).
 
 1. **bbox projection** (≈ OperandEvaluator, ``operand_evaluator.rs:23-66``):
-   one Arrow-batched pandas UDF adds (xmin,ymin,xmax,ymax) per geometry —
-   the only Python touch before refinement.
-2. **Equi-depth grid partitioner** (≈ KDB partitioner
-   ``partitioning/kdb.rs:378-393``): a seeded 1% bbox sample (10k max /
-   1k min, mirroring ``option.rs:60-70``'s reservoir sampler) drives
-   per-axis quantile boundaries, so skewed extents still give balanced
-   cells (the KDB tree's axis-alternating median splits give the same
-   marginal balancing).  Boundaries broadcast as plan literals; cell
-   lookup is a pure-JVM count-of-boundaries-≤-coordinate expression.
+   :func:`with_bbox` — one Arrow-batched pandas UDF adds
+   (xmin,ymin,xmax,ymax) per geometry, the only Python touch before
+   refinement; a precomputed box operand skips it.
+2. **Equi-depth grid** (≈ KDB partitioner ``partitioning/kdb.rs:378-393``):
+   :func:`sample_grid` — a seeded 1% bbox sample of the build side (10k
+   max / 1k min, ``option.rs:60-70``; the probe side when the build side
+   has no geometries) sized by :func:`auto_cell_target` drives per-axis
+   quantile boundaries (:class:`_Grid`), so skewed extents still give
+   balanced cells.  Boundaries ride into the plan as literals
+   (:func:`sql_double`); cell lookup is the CASE-sum :func:`bucket_sql`.
 3. **Cell assignment** (≈ partition contract ``partitioning/mod.rs:42-77``):
-   BOTH sides explode to every grid cell their bbox intersects — pure JVM
-   ``sequence``/``explode`` arithmetic, no Python.  (The reference assigns
-   build-side rows to exactly one partition and handles probe Multi-cells
-   with dedup bitmaps; with a shuffle-based engine the symmetric-explode +
-   reference-point scheme below is equivalent and needs no shared state.)
-4. **Cell equi-join + bbox filter**: the shuffle is on the cell id; Catalyst
-   plans a hash join with the bbox range condition applied in codegen.
+   :func:`cell_explode_sql` — BOTH sides explode to every grid cell their
+   bbox intersects with two ``explode(sequence(..))`` generators, pure JVM.
+   Small single-split inputs are first spread to the cluster's
+   parallelism (:func:`split_shortfall`).
+4. **Cell equi-join + bbox filter**: the shuffle is on the cell id;
+   :func:`bbox_overlap_sql` and the per-predicate
+   :func:`bbox_tighten_sql` are the join's range conditions, in codegen.
 5. **Reference-point dedup** (replaces the Multi-cell visited bitmaps,
-   ``stream.rs:82-86``): a candidate pair is emitted only in the cell that
-   contains the top-left corner of the bbox intersection — each pair
-   survives exactly once, with no distinct/shuffle.
-6. **Exact refinement** (≈ ``refine/{geo,geos,tg}.rs``): one pandas UDF
-   evaluates the exact predicate on candidate WKB pairs.
+   ``stream.rs:82-86``): :func:`ref_point_sql` keeps a candidate pair only
+   in the cell holding the top-left corner of the bbox intersection —
+   each pair survives exactly once, with no distinct/shuffle.
+6. **Exact refinement** (≈ ``refine/{geo,geos,tg}.rs``): pairs of
+   bbox-exact geometries (points, axis rectangles) are decided by
+   :func:`verdict_sql` in the JVM; the rest go to one pandas UDF over the
+   candidate WKB pairs (here :func:`_refine_udf`; the dispatch calls the
+   ``ST_*`` function itself).
 7. **Outer-join completion** (≈ ``stream.rs`` final emission): unmatched
-   rows are recovered with anti-joins on row ids and unioned in.
+   rows are recovered with anti-joins on the :func:`rowid_sql` row ids and
+   unioned in (the operator only; the dispatch routes outer and EXISTS
+   joins through it).
 
 Scale: the only shuffles are (a) the cell-id hash join and (b) outer-join
 anti-joins; skewed cells are split by AQE skew-join handling.  Candidate
@@ -42,7 +57,7 @@ that one cell's build rows fit an executor; heavily skewed data can lower
 from __future__ import annotations
 
 import math
-from typing import Iterable, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -493,185 +508,221 @@ class _Grid:
                 bounds.append(v)
         return bounds
 
-    @staticmethod
-    def _bucket(bounds: list[float], coord: Column) -> Column:
-        """Index of the cell containing ``coord`` = #boundaries <= coord.
 
-        Built as a flat sum of ``when`` terms — a plain expression tree that
-        stays inside whole-stage codegen.  (A higher-order ``aggregate``
-        over a literal array computes the same thing but is evaluated
-        interpreted per row, ~10x slower in the hot explode/join path.)
-        Bounds ride into the plan as literals — the Spark analogue of the
-        reference broadcasting partition boundaries to every probe task.
-        """
-        expr: Column = F.lit(0)
-        for b in bounds:
-            expr = expr + F.when(coord >= float(b), 1).otherwise(0)
-        return expr
-
-    @staticmethod
-    def _bucket_expr(bounds: list[float], coord_sql: str) -> Column:
-        """:meth:`_bucket` built as ONE parsed SQL string (the identical
-        CASE-sum Catalyst tree the dispatch path's ``_bucket_sql`` emits).
-        The per-term Column build costs ~4 py4j round trips per boundary ×
-        8 bucket chains per join — measured 0.35 s of g6's ~1.0 s plan
-        CONSTRUCTION per run (driver-side, guide §5); one ``F.expr`` parse
-        replaces all of it.  Falls back to the Column build when a boundary
-        is non-finite (repr round-trips only finite doubles through the
-        SQL parser)."""
-        if not bounds:
-            return F.lit(0)
-        if all(math.isfinite(b) for b in bounds):
-            return F.expr(
-                "(" + " + ".join(
-                    f"(CASE WHEN {coord_sql} >= CAST({float(b)!r} AS DOUBLE) "
-                    "THEN 1 ELSE 0 END)"
-                    for b in bounds
-                ) + ")"
-            )
-        return _Grid._bucket(bounds, F.expr(coord_sql))
-
-    def explode_cells(self, df: DataFrame, prefix: str, expand: float) -> DataFrame:
-        """Add ``__cell`` rows for every grid cell the (expanded) bbox
-        intersects: two plain ``explode(sequence(lo, hi))`` generators (x
-        then y) — ordinary expressions that stay in codegen, no
-        higher-order array construction.
-
-        The min cell indices ride along as ``__{prefix}ix0``/``__{prefix}iy0``
-        so the per-pair reference-point dedup downstream is O(1): the bucket
-        function is monotone, hence bucket(max(a, b)) = max(bucket(a),
-        bucket(b)) — the O(#boundaries) bucket scan runs once per input row
-        here, never per candidate pair."""
-        ex = float(expand)
-        ix0 = self._bucket_expr(self.xb, f"(`{prefix}xmin` - CAST({ex!r} AS DOUBLE))")
-        ix1 = self._bucket_expr(self.xb, f"(`{prefix}xmax` + CAST({ex!r} AS DOUBLE))")
-        iy0 = self._bucket_expr(self.yb, f"(`{prefix}ymin` - CAST({ex!r} AS DOUBLE))")
-        iy1 = self._bucket_expr(self.yb, f"(`{prefix}ymax` + CAST({ex!r} AS DOUBLE))")
-        return (
-            df.withColumn(f"__{prefix}ix0", ix0)
-            .withColumn(f"__{prefix}iy0", iy0)
-            .withColumn("__cx", F.explode(F.sequence(F.col(f"__{prefix}ix0"), ix1)))
-            .withColumn("__cy", F.explode(F.sequence(F.col(f"__{prefix}iy0"), iy1)))
-            .withColumn("__cell", F.col("__cx") * self.ny + F.col("__cy"))
-            .drop("__cx", "__cy")
-        )
-
-    def ref_point_in_cell(self) -> Column:
-        """Reference-point dedup: emit the pair only in the cell holding the
-        top-left corner of the (expanded) bbox intersection — each pair
-        survives exactly once with no distinct/shuffle (replaces the
-        reference's Multi-cell visited bitmaps, ``stream.rs:82-86``).
-
-        The intersection corner's cell is ``max`` of the two sides'
-        precomputed min cell indices (bucket is monotone), so this is a
-        constant-work predicate per candidate pair."""
-        cell = (
-            F.greatest(F.col("__l_ix0"), F.col("__r_ix0")) * self.ny
-            + F.greatest(F.col("__l_iy0"), F.col("__r_iy0"))
-        )
-        return cell == F.col("__cell")
+# -- the grid join's stages, as SQL fragments over caller-given references ---
 
 
-def exact_verdict(predicate: str, distance: Optional[float]) -> Column:
+def sql_double(v: float) -> str:
+    """A DOUBLE literal for generated SQL.  ``repr`` of a non-finite float
+    (``inf``/``nan``) is not a SQL literal, so those go through the string
+    cast Spark folds to the same constant."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"CAST({v!r} AS DOUBLE)"
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
+def bucket_sql(bounds: list[float], coord: str) -> str:
+    """Index of the grid cell holding ``coord`` = #boundaries <= coord.
+
+    A flat sum of CASE terms — a plain expression tree that stays inside
+    whole-stage codegen (a higher-order ``aggregate`` over a literal array
+    computes the same thing interpreted per row, ~10x slower in the hot
+    explode/join path).  Bounds ride into the plan as literals — the Spark
+    analogue of the reference broadcasting partition boundaries to every
+    probe task."""
+    if not bounds:
+        return "0"
+    return "(" + " + ".join(
+        f"(CASE WHEN {coord} >= {sql_double(b)} THEN 1 ELSE 0 END)" for b in bounds
+    ) + ")"
+
+
+def cell_explode_sql(
+    grid: _Grid, bbox: tuple[str, str, str, str], idx: str, expand: float
+) -> list[list[str]]:
+    """Select lists that, applied in order, give one ``__cell`` row per grid
+    cell the (expanded) ``bbox`` intersects: the four cell-index bounds of
+    the bbox (bucketed once per input row), then two plain
+    ``explode(sequence(lo, hi))`` generators (x then y) — ordinary
+    expressions that stay in codegen, no higher-order array construction.
+
+    The min cell indices stay as columns ``{idx}x0``/``{idx}y0`` so the
+    per-pair reference-point dedup (:func:`ref_point_sql`) is O(1): the
+    bucket function is monotone, hence bucket(max(a, b)) = max(bucket(a),
+    bucket(b)) — the O(#boundaries) bucket scan never runs per candidate
+    pair."""
+    e = sql_double(expand)
+    x0, y0, x1, y1 = bbox
+    return [
+        [
+            "*",
+            f"{bucket_sql(grid.xb, f'({x0} - {e})')} AS {idx}x0",
+            f"{bucket_sql(grid.xb, f'({x1} + {e})')} AS {idx}x1",
+            f"{bucket_sql(grid.yb, f'({y0} - {e})')} AS {idx}y0",
+            f"{bucket_sql(grid.yb, f'({y1} + {e})')} AS {idx}y1",
+        ],
+        ["*", f"explode(sequence({idx}x0, {idx}x1)) AS __cx"],
+        ["*", f"explode(sequence({idx}y0, {idx}y1)) AS __cy"],
+        [f"* EXCEPT (__cx, __cy, {idx}x1, {idx}y1)", f"__cx * {grid.ny} + __cy AS __cell"],
+    ]
+
+
+def bbox_overlap_sql(l: tuple, r: tuple, expand: float) -> list[str]:
+    """The candidate condition: bbox ``l`` grown by ``expand`` overlaps
+    bbox ``r`` (closed intervals), one conjunct per bound."""
+    e = sql_double(expand)
+    lx0, ly0, lx1, ly1 = l
+    rx0, ry0, rx1, ry1 = r
+    return [
+        f"{lx0} - {e} <= {rx1}",
+        f"{rx0} <= {lx1} + {e}",
+        f"{ly0} - {e} <= {ry1}",
+        f"{ry0} <= {ly1} + {e}",
+    ]
+
+
+def ref_point_sql(ny: int, l_idx: str, r_idx: str, cell: str) -> str:
+    """Reference-point dedup: keep the pair only in the cell holding the
+    top-left corner of the (expanded) bbox intersection — each pair
+    survives exactly once with no distinct/shuffle.  That corner's cell is
+    the ``greatest`` of the two sides' min cell indices (``{idx}x0``/
+    ``{idx}y0`` of :func:`cell_explode_sql`; bucket is monotone), so this
+    is constant work per candidate pair."""
+    return (
+        f"(greatest({l_idx}x0, {r_idx}x0) * {ny} + greatest({l_idx}y0, {r_idx}y0))"
+        f" = {cell}"
+    )
+
+
+def verdict_sql(
+    key: str,
+    lf: tuple[str, str, str, str],
+    rf: tuple[str, str, str, str],
+    e: float = 0.0,
+    strict: bool = False,
+) -> str:
     """Exact predicate verdict for pairs where BOTH geometries equal their
     own bbox (point or axis-aligned rectangle — ``bbox_exact``): every join
-    predicate is then decidable from the bbox coordinates alone, entirely
-    inside whole-stage codegen.  This is the Spark analogue of the
-    reference's dedicated point/rect refinement fast paths — for workloads
-    of points and axis rectangles no row ever crosses into Python.
+    predicate is then decidable from the (xmin, ymin, xmax, ymax) fields
+    ``lf``/``rf`` alone, inside whole-stage codegen — the analogue of the
+    reference's point/rect refinement fast paths.  ``lf`` is the
+    predicate's first argument.  Also the literal-geometry filter
+    pushdown's exact elimination, so the boundary semantics (open intervals
+    for point within/contains) cannot drift between uses.
 
     OGC semantics notes (interior/boundary handled per dimension pairing):
     a bbox-exact geometry is a POINT iff its bbox is degenerate in both
-    axes; otherwise it is a non-degenerate axis rectangle POLYGON.
-    """
-    lx0, ly0 = F.col("l_xmin"), F.col("l_ymin")
-    lx1, ly1 = F.col("l_xmax"), F.col("l_ymax")
-    rx0, ry0 = F.col("r_xmin"), F.col("r_ymin")
-    rx1, ry1 = F.col("r_xmax"), F.col("r_ymax")
-    lpt = (lx0 == lx1) & (ly0 == ly1)
-    rpt = (rx0 == rx1) & (ry0 == ry1)
-    overlap = (lx0 <= rx1) & (rx0 <= lx1) & (ly0 <= ry1) & (ry0 <= ly1)
-    eq = (lx0 == rx0) & (lx1 == rx1) & (ly0 == ry0) & (ly1 == ry1)
-    l_in_r = (rx0 <= lx0) & (lx1 <= rx1) & (ry0 <= ly0) & (ly1 <= ry1)
-    r_in_l = (lx0 <= rx0) & (rx1 <= lx1) & (ly0 <= ry0) & (ry1 <= ly1)
+    axes; otherwise it is a non-degenerate axis rectangle POLYGON.  ``bbox``
+    (BBox_Intersects) is the closed overlap; ``strict`` makes dwithin the
+    ``ST_Distance(..) < d`` form."""
+    lx0, ly0, lx1, ly1 = lf
+    rx0, ry0, rx1, ry1 = rf
+    lpt = f"({lx0} = {lx1} AND {ly0} = {ly1})"
+    rpt = f"({rx0} = {rx1} AND {ry0} = {ry1})"
+    overlap = f"({lx0} <= {rx1} AND {rx0} <= {lx1} AND {ly0} <= {ry1} AND {ry0} <= {ly1})"
+    eq = f"({lx0} = {rx0} AND {lx1} = {rx1} AND {ly0} = {ry0} AND {ly1} = {ry1})"
+    l_in_r = f"({rx0} <= {lx0} AND {lx1} <= {rx1} AND {ry0} <= {ly0} AND {ly1} <= {ry1})"
+    r_in_l = f"({lx0} <= {rx0} AND {rx1} <= {lx1} AND {ly0} <= {ry0} AND {ry1} <= {ly1})"
     # strictly inside the other's interior
-    l_in_r_open = (rx0 < lx0) & (lx1 < rx1) & (ry0 < ly0) & (ly1 < ry1)
-    r_in_l_open = (lx0 < rx0) & (rx1 < lx1) & (ly0 < ry0) & (ry1 < ly1)
-    if predicate == "intersects":
+    l_in_r_open = f"({rx0} < {lx0} AND {lx1} < {rx1} AND {ry0} < {ly0} AND {ly1} < {ry1})"
+    r_in_l_open = f"({lx0} < {rx0} AND {rx1} < {lx1} AND {ly0} < {ry0} AND {ry1} < {ly1})"
+    if key in ("intersects", "bbox"):
         return overlap
-    if predicate == "equals":
+    if key == "equals":
         return eq
-    if predicate == "covered_by":
+    if key == "covered_by":
         return l_in_r
-    if predicate == "covers":
+    if key == "covers":
         return r_in_l
-    if predicate == "within":
+    if key == "within":
         # point-on-rect-boundary is NOT within (interior test is strict);
         # rect-in-rect may share boundary (interiors still intersect)
         return (
-            F.when(lpt & rpt, eq)
-            .when(lpt, l_in_r_open)
-            .when(rpt, F.lit(False))
-            .otherwise(l_in_r)
+            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
+            f"WHEN {lpt} THEN {l_in_r_open} "
+            f"WHEN {rpt} THEN false ELSE {l_in_r} END)"
         )
-    if predicate == "contains":
+    if key == "contains":
         return (
-            F.when(lpt & rpt, eq)
-            .when(rpt, r_in_l_open)
-            .when(lpt, F.lit(False))
-            .otherwise(r_in_l)
+            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
+            f"WHEN {rpt} THEN {r_in_l_open} "
+            f"WHEN {lpt} THEN false ELSE {r_in_l} END)"
         )
-    if predicate == "touches":
+    if key == "touches":
         # boundaries meet, interiors don't
-        degenerate = (F.greatest(lx0, rx0) == F.least(lx1, rx1)) | (
-            F.greatest(ly0, ry0) == F.least(ly1, ry1)
+        degen = (
+            f"(greatest({lx0}, {rx0}) = least({lx1}, {rx1}) "
+            f"OR greatest({ly0}, {ry0}) = least({ly1}, {ry1}))"
         )
-        l_on_r_bnd = overlap & ((lx0 == rx0) | (lx0 == rx1) | (ly0 == ry0) | (ly0 == ry1))
-        r_on_l_bnd = overlap & ((rx0 == lx0) | (rx0 == lx1) | (ry0 == ly0) | (ry0 == ly1))
+        l_on_r = f"({overlap} AND ({lx0} = {rx0} OR {lx0} = {rx1} OR {ly0} = {ry0} OR {ly0} = {ry1}))"
+        r_on_l = f"({overlap} AND ({rx0} = {lx0} OR {rx0} = {lx1} OR {ry0} = {ly0} OR {ry0} = {ly1}))"
         return (
-            F.when(lpt & rpt, F.lit(False))
-            .when(lpt, l_on_r_bnd)
-            .when(rpt, r_on_l_bnd)
-            .otherwise(overlap & degenerate)
+            f"(CASE WHEN {lpt} AND {rpt} THEN false "
+            f"WHEN {lpt} THEN {l_on_r} WHEN {rpt} THEN {r_on_l} "
+            f"ELSE ({overlap} AND {degen}) END)"
         )
-    if predicate == "overlaps":
+    if key == "overlaps":
         # same-dimension proper overlap: 2D interior intersection, neither
         # side contained in the other; any point operand -> false
-        proper = (F.greatest(lx0, rx0) < F.least(lx1, rx1)) & (
-            F.greatest(ly0, ry0) < F.least(ly1, ry1)
+        proper = (
+            f"(greatest({lx0}, {rx0}) < least({lx1}, {rx1}) "
+            f"AND greatest({ly0}, {ry0}) < least({ly1}, {ry1}))"
         )
-        return F.when(lpt | rpt, F.lit(False)).otherwise(proper & ~l_in_r & ~r_in_l)
-    if predicate == "crosses":
+        return (
+            f"(CASE WHEN {lpt} OR {rpt} THEN false "
+            f"ELSE ({proper} AND NOT {l_in_r} AND NOT {r_in_l}) END)"
+        )
+    if key == "crosses":
         # bbox-exact operands are points (dim 0) or axis rectangles (dim 2):
         # P×P and R×R have equal non-lineal dims (false); P×R intersecting
         # is always fully covered ("all interior points in common") — false
-        return F.lit(False)
-    if predicate == "dwithin":
-        d = float(distance or 0.0)
-        dx = F.greatest(lx0 - rx1, rx0 - lx1, F.lit(0.0))
-        dy = F.greatest(ly0 - ry1, ry0 - ly1, F.lit(0.0))
-        return dx * dx + dy * dy <= F.lit(d * d)
-    raise ValueError(f"unknown predicate {predicate}")
+        return "false"
+    if key == "dwithin":
+        dx = f"greatest({lx0} - {rx1}, {rx0} - {lx1}, CAST(0.0 AS DOUBLE))"
+        dy = f"greatest({ly0} - {ry1}, {ry0} - {ly1}, CAST(0.0 AS DOUBLE))"
+        op = "<" if strict else "<="
+        if math.isinf(e * e):
+            # d*d overflows: every squared distance would pass against
+            # +Infinity, so compare the (overflow-free) distance itself
+            return f"(hypot({dx}, {dy}) {op} {sql_double(e)})"
+        return f"(({dx}) * ({dx}) + ({dy}) * ({dy}) {op} {sql_double(e * e)})"
+    raise ValueError(f"unknown predicate key {key}")
 
 
-def bbox_prefilter(predicate: str) -> Optional[Column]:
+# the closed bbox relation each predicate implies for ANY geometry
+_TIGHTEN = {
+    "within": "covered_by",
+    "covered_by": "covered_by",
+    "contains": "covers",
+    "covers": "covers",
+    "equals": "equals",
+}
+
+
+def bbox_tighten_sql(key: str, lf: tuple, rf: tuple) -> Optional[str]:
     """Necessary bbox condition per predicate — tightens the generic bbox
     overlap before refinement for ANY geometry (≈ the reference evaluating
-    the predicate's bbox implication during candidate generation).
+    the predicate's bbox implication during candidate generation):
     ``within(l, r)`` implies bbox(l) ⊆ bbox(r), ``equals`` implies equal
-    bboxes, etc.  Returns None when plain overlap is already tight.
-    """
-    lx0, ly0 = F.col("l_xmin"), F.col("l_ymin")
-    lx1, ly1 = F.col("l_xmax"), F.col("l_ymax")
-    rx0, ry0 = F.col("r_xmin"), F.col("r_ymin")
-    rx1, ry1 = F.col("r_xmax"), F.col("r_ymax")
-    if predicate in ("within", "covered_by"):
-        return (rx0 <= lx0) & (lx1 <= rx1) & (ry0 <= ly0) & (ly1 <= ry1)
-    if predicate in ("contains", "covers"):
-        return (lx0 <= rx0) & (rx1 <= lx1) & (ly0 <= ry0) & (ry1 <= ly1)
-    if predicate == "equals":
-        return (lx0 == rx0) & (lx1 == rx1) & (ly0 == ry0) & (ly1 == ry1)
-    return None
+    bboxes, etc. — the bbox-exact verdict of that closed relation.  None
+    when plain overlap is already tight."""
+    rel = _TIGHTEN.get(key)
+    return None if rel is None else verdict_sql(rel, lf, rf)
+
+
+def rowid_sql(cols: list[str]) -> str:
+    """Deterministic 128-bit row id: two independent xxhash64 seeds over
+    the natural columns.  Unlike monotonically_increasing_id it survives
+    partition recomputation, so anti/semi joins on it are exact without
+    pinning the input in cache (≈ the reference's positional visited
+    bitmaps, likewise recompute-stable).  Identical rows share an id,
+    which is correct for join completion — twins match or miss
+    identically."""
+    refs = ", ".join("`" + c.replace("`", "``") + "`" for c in cols)
+    return f"named_struct('h1', xxhash64({refs}), 'h2', xxhash64({0x9E3779B9}, {refs}))"
 
 
 def _bbcol(c) -> Column:
@@ -745,6 +796,45 @@ def collect_bbox_sample(src: DataFrame, geom_col: str) -> list[tuple]:
         .select("s_xmin", "s_ymin", "s_xmax", "s_ymax")
         .dropna()
     )
+
+
+def sample_grid(
+    build: DataFrame,
+    build_geom: str,
+    build_bbox: Optional[tuple],
+    probe: DataFrame,
+    probe_geom: str,
+    probe_bbox: Optional[tuple],
+    cell_target: Optional[int] = None,
+) -> _Grid:
+    """The join's grid, from a seeded bbox sample of the build side taken
+    from its raw (pre-repartition) input so the sampling job stays narrow;
+    the probe side's sample when the build side has no geometries.  A
+    side's box operand (``*_bbox``, see :func:`spatial_join`) makes its
+    sample pure JVM.  ``cell_target`` None sizes the grid from the sample
+    (:func:`auto_cell_target`)."""
+
+    def sample(df: DataFrame, geom: str, bbox: Optional[tuple]) -> list[tuple]:
+        if bbox is not None:
+            return collect_bbox_sample_cols(df, bbox)
+        return collect_bbox_sample(df, geom)
+
+    pts = (
+        sample(build, build_geom, build_bbox)
+        or sample(probe, probe_geom, probe_bbox)
+        or [(0.0, 0.0, 1.0, 1.0)]
+    )
+    return _Grid(pts, auto_cell_target(pts) if cell_target is None else cell_target)
+
+
+def split_shortfall(df: DataFrame) -> Optional[int]:
+    """Parallelism guard: a small local input may arrive as a single file
+    split, serializing the whole pipeline onto one core.  Returns the
+    cluster's parallelism when ``df`` has fewer splits (the caller
+    round-robins it up to that), else None — a no-op at scale, where the
+    scan already yields >= defaultParallelism splits."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return par if df.rdd.getNumPartitions() < par else None
 
 
 def spatial_join(
@@ -825,18 +915,6 @@ def spatial_join(
     rcols_out = [c if c not in overlap else f"{c}_right" for c in rcols]
     rgeom = right_geom if right_geom not in overlap else f"{right_geom}_right"
 
-    # Deterministic 128-bit row ids (two independent xxhash64 seeds over the
-    # natural columns).  Unlike monotonically_increasing_id, these survive
-    # partition recomputation, so the outer-join anti-joins below are exact
-    # without pinning the inputs in cache (≈ the reference's positional
-    # visited bitmaps, which are likewise recompute-stable).  Identical rows
-    # share an id; that is correct here — twins match or miss identically.
-    def _rowid(cols: list[str]) -> Column:
-        return F.struct(
-            F.xxhash64(*[F.col(c) for c in cols]).alias("h1"),
-            F.xxhash64(F.lit(0x9E3779B9), *[F.col(c) for c in cols]).alias("h2"),
-        )
-
     # bbox column names renamed alongside the rest of the right side
     # (Column expressions pass through untouched)
     rbbox = right_bbox
@@ -845,30 +923,13 @@ def spatial_join(
             f"{c}_right" if isinstance(c, str) and c in overlap else c for c in rbbox
         )
 
-    # grid from a seeded 1% sample of the right (build) side, 10k cap / 1k
-    # min (option.rs:60-70); taken from the raw (pre-repartition) input so
-    # the sampling job stays narrow.  Falls back to the left side if the
-    # right has no geometries.
-    if rbbox is not None:
-        sample = collect_bbox_sample_cols(right_renamed, rbbox)
-    else:
-        sample = collect_bbox_sample(right_renamed, rgeom)
-    if not sample:
-        if left_bbox is not None:
-            sample = collect_bbox_sample_cols(left, left_bbox)
-        else:
-            sample = collect_bbox_sample(left, left_geom)
-    sample = sample or [(0.0, 0.0, 1.0, 1.0)]
-
-    # Parallelism guard: a small local input may arrive as a single file
-    # split, serializing the whole pipeline onto one core.  Round-robin
-    # repartition up to the cluster's parallelism — a no-op at scale, where
-    # the scan already yields >= defaultParallelism splits.
-    par = left.sparkSession.sparkContext.defaultParallelism
-    if left.rdd.getNumPartitions() < par:
-        left = left.repartition(par)
-    if right_renamed.rdd.getNumPartitions() < par:
-        right_renamed = right_renamed.repartition(par)
+    grid = sample_grid(
+        right_renamed, rgeom, rbbox, left, left_geom, left_bbox, cell_target
+    )
+    if n := split_shortfall(left):
+        left = left.repartition(n)
+    if n := split_shortfall(right_renamed):
+        right_renamed = right_renamed.repartition(n)
 
     def _attach_bbox(df: DataFrame, bbox: Optional[tuple], geom: str, p: str) -> DataFrame:
         if bbox is None:
@@ -883,32 +944,30 @@ def spatial_join(
             exact.alias(f"{p}exact"),
         )
 
-    l = _attach_bbox(left, left_bbox, left_geom, "l_").withColumn("__lid", _rowid(lcols))
-    r = _attach_bbox(right_renamed, rbbox, rgeom, "r_").withColumn("__rid", _rowid(rcols_out))
-
-    if cell_target is None:
-        cell_target = auto_cell_target(sample)
-    grid = _Grid(sample, cell_target)
+    l = _attach_bbox(left, left_bbox, left_geom, "l_").withColumn(
+        "__lid", F.expr(rowid_sql(lcols))
+    )
+    r = _attach_bbox(right_renamed, rbbox, rgeom, "r_").withColumn(
+        "__rid", F.expr(rowid_sql(rcols_out))
+    )
 
     # No explicit null-bbox filter: explode(sequence(...)) over a null bbox
     # yields cell 0 and the null bbox comparisons below drop the row — an
     # explicit dropna would split the bbox UDF into a second ArrowEvalPython
     # (Catalyst pushes the filter through the projection, duplicating the
     # Python call per side).
-    le = grid.explode_cells(l, "l_", expand)
-    re = grid.explode_cells(r, "r_", 0.0)
-
-    bbox_cond = (
-        (F.col("l_xmin") - expand <= F.col("r_xmax"))
-        & (F.col("r_xmin") <= F.col("l_xmax") + expand)
-        & (F.col("l_ymin") - expand <= F.col("r_ymax"))
-        & (F.col("r_ymin") <= F.col("l_ymax") + expand)
-    )
-    cand = le.join(re, "__cell").filter(bbox_cond)
-    pre = bbox_prefilter(predicate)
-    if pre is not None:
-        cand = cand.filter(pre)
-    cand = cand.filter(grid.ref_point_in_cell())
+    lb = ("l_xmin", "l_ymin", "l_xmax", "l_ymax")
+    rb = ("r_xmin", "r_ymin", "r_xmax", "r_ymax")
+    le, re = l, r
+    for items in cell_explode_sql(grid, lb, "__l_i", expand):
+        le = le.selectExpr(*items)
+    for items in cell_explode_sql(grid, rb, "__r_i", 0.0):
+        re = re.selectExpr(*items)
+    cand = le.join(re, "__cell").filter(" AND ".join(bbox_overlap_sql(lb, rb, expand)))
+    tight = bbox_tighten_sql(predicate, lb, rb)
+    if tight is not None:
+        cand = cand.filter(tight)
+    cand = cand.filter(ref_point_sql(grid.ny, "__l_i", "__r_i", "__cell"))
 
     # Pairs where both geometries equal their own bbox (points / axis
     # rectangles) get an exact pure-JVM verdict; only the remaining pairs'
@@ -918,8 +977,9 @@ def spatial_join(
     # batch carries no geometry bytes and the UDF short-circuits on them.
     # refine="none" drops the Python stage entirely (caller asserts
     # bbox-exactness; the verdict is then the exact predicate).
+    verdict = F.expr(verdict_sql(predicate, lb, rb, expand))
     if refine == "none":
-        matched = cand.filter(exact_verdict(predicate, distance))
+        matched = cand.filter(verdict)
         chosen_mode = "none"
     else:
         if exec_mode == "speculative":
@@ -942,9 +1002,7 @@ def spatial_join(
             F.when(~both_exact, F.col(rgeom)),
         )
         matched = cand.filter(
-            F.when(both_exact, exact_verdict(predicate, distance)).otherwise(
-                F.coalesce(refined, F.lit(False))
-            )
+            F.when(both_exact, verdict).otherwise(F.coalesce(refined, F.lit(False)))
         )
 
     bbox_helper = [

@@ -8,17 +8,27 @@ same SQL as a BroadcastNestedLoopJoin evaluating the predicate UDF on the
 full cross product — O(n·m) rows through Python.
 
 This module is the Spark-side analogue, applied at the SQL-text level in
-``EngineSession.sql`` (the engine's only SQL entry, mirroring where the
-reference hooks its logical rewrite): a join whose ON condition is a
-recognized spatial predicate is rewritten into the *same* grid equi-join the
-DataFrame operator ``operators.spatial_join`` produces —
+``EngineSession.sql`` (the engine's only SQL entry, the point where the
+reference hooks its logical rewrite).  It owns only the SQL text handling:
+recognizing the join, resolving its relations, star expansion, and
+splicing.  Every stage of the grid join itself is defined in
+``operators/spatial_join.py`` and used from there:
 
-  1. each side gains ``__bb`` (bbox struct, one Arrow-batched UDF) and
-     explodes to its grid cells (pure-JVM quantile-bucket arithmetic over
-     boundary literals sampled from the build side);
-  2. the ON condition becomes ``a.__cell = b.__cell`` + bbox-overlap
-     conjuncts + reference-point dedup + the original predicate as the
-     exact refine filter.
+  1. each side gains ``__bb`` (bbox struct from the ``__st_bbox`` UDF or a
+     registered bbox, :func:`_side_sql`) and explodes to its grid cells
+     with ``cell_explode_sql`` over the grid ``sample_grid`` built from the
+     build side (cached per session, :func:`_get_grid`), spread first by
+     ``split_shortfall``;
+  2. the ON condition (:func:`_grid_join_sql`) becomes ``a.__cell =
+     b.__cell`` + ``bbox_overlap_sql`` + ``ref_point_sql`` +
+     ``bbox_tighten_sql`` + the exact predicate: ``verdict_sql`` for
+     bbox-exact pairs, the original ``ST_*`` call on NULL-masked inputs for
+     the rest.
+
+Inner joins (first in the FROM, or anywhere in an inner-join chain) are
+rewritten this way.  Outer and ``[NOT] EXISTS`` joins run the DataFrame
+operator ``spatial_join`` itself (it owns outer completion and semi/anti
+joins on ``rowid_sql`` row ids) and are exposed back to SQL as a temp view.
 
 Catalyst then plans a shuffled hash / sort-merge join on the cell id with
 the refine UDF as a post-join filter — the scalable plan shape — instead of
@@ -36,8 +46,8 @@ unchanged, which is always correct, just slower):
   through the DataFrame operator's outer completion
   (:func:`try_outer_spatial_join`): the joined frame is registered as a
   temp view and the statement's alias-qualified references are rewritten
-  against it — mirroring ``optimizer.rs:33-113`` + ``exec.rs:47-131``
-  supporting every join type.
+  against it (``optimizer.rs:33-113`` + ``exec.rs:47-131`` support every
+  join type).
 """
 
 from __future__ import annotations
@@ -62,6 +72,11 @@ _FROM_JOIN_RE = re.compile(
     r"(?:INNER\s+)?JOIN\s+(?P<rt>[A-Za-z_][\w.]*)\s+(?:AS\s+)?(?P<ra>[A-Za-z_]\w*)\s+"
     r"ON\s+",
     re.IGNORECASE,
+)
+
+# a further join right after a rewritten ON clause
+_TAIL_JOIN_RE = re.compile(
+    r"\s*(?:(?:LEFT|RIGHT|FULL|INNER|CROSS)\s+(?:OUTER\s+)?)?JOIN\b", re.IGNORECASE
 )
 
 _RESERVED_ALIAS = {
@@ -465,17 +480,7 @@ def _expand_select_stars(
 
 
 def _is_wrapped(p: str) -> bool:
-    if not (p.startswith("(") and p.endswith(")")):
-        return False
-    depth = 0
-    for i, ch in enumerate(p):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i == len(p) - 1
-    return False
+    return p.startswith("(") and _close_paren(p, 1) == len(p) - 1
 
 
 def _match_spatial_conjunct(c: str):
@@ -514,108 +519,6 @@ def _match_spatial_conjunct(c: str):
     return None
 
 
-def _verdict_sql(key: str, b1: str, b2: str, e: float = 0.0, strict: bool = False) -> str:
-    """SQL spelling of ``operators.spatial_join.exact_verdict`` over two
-    ``__bb`` struct references — the exact predicate for bbox-exact pairs
-    (point / axis rectangle), decided fully JVM-side.  ``b1``/``b2`` follow
-    the predicate's argument order (g1 = b1's geometry)."""
-    return _verdict_sql_fields(
-        key,
-        (f"{b1}.xmin", f"{b1}.ymin", f"{b1}.xmax", f"{b1}.ymax"),
-        (f"{b2}.xmin", f"{b2}.ymin", f"{b2}.xmax", f"{b2}.ymax"),
-        e,
-        strict,
-    )
-
-
-def _verdict_sql_fields(
-    key: str,
-    lf: tuple[str, str, str, str],
-    rf: tuple[str, str, str, str],
-    e: float = 0.0,
-    strict: bool = False,
-) -> str:
-    """:func:`_verdict_sql` over explicit (xmin, ymin, xmax, ymax) SQL
-    field expressions — shared with the filter pushdown's exact
-    elimination so the boundary semantics (open intervals for point
-    within/contains) cannot drift between the two paths."""
-    lx0, ly0, lx1, ly1 = lf
-    rx0, ry0, rx1, ry1 = rf
-    lpt = f"({lx0} = {lx1} AND {ly0} = {ly1})"
-    rpt = f"({rx0} = {rx1} AND {ry0} = {ry1})"
-    overlap = f"({lx0} <= {rx1} AND {rx0} <= {lx1} AND {ly0} <= {ry1} AND {ry0} <= {ly1})"
-    eq = f"({lx0} = {rx0} AND {lx1} = {rx1} AND {ly0} = {ry0} AND {ly1} = {ry1})"
-    l_in_r = f"({rx0} <= {lx0} AND {lx1} <= {rx1} AND {ry0} <= {ly0} AND {ly1} <= {ry1})"
-    r_in_l = f"({lx0} <= {rx0} AND {rx1} <= {lx1} AND {ly0} <= {ry0} AND {ry1} <= {ly1})"
-    l_in_r_open = f"({rx0} < {lx0} AND {lx1} < {rx1} AND {ry0} < {ly0} AND {ly1} < {ry1})"
-    r_in_l_open = f"({lx0} < {rx0} AND {rx1} < {lx1} AND {ly0} < {ry0} AND {ry1} < {ly1})"
-    if key in ("intersects", "bbox"):
-        return overlap
-    if key == "equals":
-        return eq
-    if key == "covered_by":
-        return l_in_r
-    if key == "covers":
-        return r_in_l
-    if key == "within":
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
-            f"WHEN {lpt} THEN {l_in_r_open} "
-            f"WHEN {rpt} THEN false ELSE {l_in_r} END)"
-        )
-    if key == "contains":
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN {eq} "
-            f"WHEN {rpt} THEN {r_in_l_open} "
-            f"WHEN {lpt} THEN false ELSE {r_in_l} END)"
-        )
-    if key == "touches":
-        degen = (
-            f"(greatest({lx0}, {rx0}) = least({lx1}, {rx1}) "
-            f"OR greatest({ly0}, {ry0}) = least({ly1}, {ry1}))"
-        )
-        l_on_r = f"({overlap} AND ({lx0} = {rx0} OR {lx0} = {rx1} OR {ly0} = {ry0} OR {ly0} = {ry1}))"
-        r_on_l = f"({overlap} AND ({rx0} = {lx0} OR {rx0} = {lx1} OR {ry0} = {ly0} OR {ry0} = {ly1}))"
-        return (
-            f"(CASE WHEN {lpt} AND {rpt} THEN false "
-            f"WHEN {lpt} THEN {l_on_r} WHEN {rpt} THEN {r_on_l} "
-            f"ELSE ({overlap} AND {degen}) END)"
-        )
-    if key == "overlaps":
-        proper = (
-            f"(greatest({lx0}, {rx0}) < least({lx1}, {rx1}) "
-            f"AND greatest({ly0}, {ry0}) < least({ly1}, {ry1}))"
-        )
-        return (
-            f"(CASE WHEN {lpt} OR {rpt} THEN false "
-            f"ELSE ({proper} AND NOT {l_in_r} AND NOT {r_in_l}) END)"
-        )
-    if key == "crosses":
-        # bbox-exact pairs are points/axis-rects: crosses is always false
-        # (equal non-lineal dims, or point fully covered by the rect)
-        return "false"
-    if key == "dwithin":
-        dx = f"greatest({lx0} - {rx1}, {rx0} - {lx1}, CAST(0.0 AS DOUBLE))"
-        dy = f"greatest({ly0} - {ry1}, {ry0} - {ly1}, CAST(0.0 AS DOUBLE))"
-        op = "<" if strict else "<="
-        return f"(({dx}) * ({dx}) + ({dy}) * ({dy}) {op} CAST({e * e!r} AS DOUBLE))"
-    raise ValueError(f"unknown predicate key {key}")
-
-
-def _bucket_sql(bounds: list[float], coord: str) -> str:
-    """#boundaries <= coord as a flat sum of CASE terms — a plain
-    expression tree that stays inside whole-stage codegen (same shape as
-    ``operators.spatial_join._Grid._bucket``; a higher-order ``aggregate``
-    over a literal array is evaluated interpreted and is ~10x slower in
-    the hot join path)."""
-    if not bounds:
-        return "0"
-    return "(" + " + ".join(
-        f"(CASE WHEN {coord} >= CAST({b!r} AS DOUBLE) THEN 1 ELSE 0 END)"
-        for b in bounds
-    ) + ")"
-
-
 def _side_sql(
     table: str,
     geom_col: str,
@@ -625,26 +528,27 @@ def _side_sql(
     bbox_meta=None,
 ) -> str:
     """Derived relation with ``__bb`` + one ``__cell`` row per grid cell the
-    (expanded) bbox intersects — two plain explode(sequence(..)) generators,
-    mirroring ``_Grid.explode_cells``.  The min cell indices stay exposed as
-    ``__ix0``/``__iy0`` so the per-pair reference-point dedup in the ON
-    clause is O(1) (bucket is monotone: bucket(max) = max(bucket)).
+    (expanded) bbox intersects: the operator's cell explode
+    (``cell_explode_sql``) over flat bbox columns, with the min cell
+    indices kept as ``__ix0``/``__iy0`` for the ON clause's
+    reference-point dedup.
 
     ``repartition`` injects a REPARTITION hint below the bbox UDF when the
-    source scan has fewer splits than the cluster's parallelism (the
-    DataFrame path's parallelism guard; a no-op at scale).
+    source scan has fewer splits than the cluster's parallelism
+    (``split_shortfall``).
 
     ``bbox_meta`` (session.register_bbox) replaces the ``__st_bbox`` pandas
     UDF with pure codegen expressions over the view's own columns — the
     bbox pass then costs zero Python (and lets Catalyst prune the geometry
     column entirely when the refine stage is skipped too)."""
-    e = float(expand)
+    from dataclod_spark.operators.spatial_join import cell_explode_sql
+
     src = table
     if repartition:
         src = f"(SELECT /*+ REPARTITION({int(repartition)}) */ * FROM {table})"
     if bbox_meta is not None:
         # flat codegen columns straight from the registered expressions
-        flat = (
+        body = (
             f"(SELECT *, CAST(({bbox_meta.xmin}) AS DOUBLE) AS __bbx0, "
             f"CAST(({bbox_meta.ymin}) AS DOUBLE) AS __bby0, "
             f"CAST(({bbox_meta.xmax}) AS DOUBLE) AS __bbx1, "
@@ -652,28 +556,22 @@ def _side_sql(
             f"{'true' if bbox_meta.exact else 'false'} AS __bbe FROM {src})"
         )
     else:
-        flat = (
+        body = (
             f"(SELECT * EXCEPT (__bb), __bb.xmin AS __bbx0, __bb.ymin AS __bby0, "
             f"__bb.xmax AS __bbx1, __bb.ymax AS __bby1, __bb.bbox_exact AS __bbe FROM "
             f"(SELECT *, __st_bbox(`{geom_col}`) AS __bb FROM {src}))"
         )
-    ix0 = _bucket_sql(grid.xb, f"(__bbx0 - {e!r})")
-    ix1 = _bucket_sql(grid.xb, f"(__bbx1 + {e!r})")
-    iy0 = _bucket_sql(grid.yb, f"(__bby0 - {e!r})")
-    iy1 = _bucket_sql(grid.yb, f"(__bby1 + {e!r})")
+    flat = ("__bbx0", "__bby0", "__bbx1", "__bby1")
+    for k, items in enumerate(cell_explode_sql(grid, flat, "__i", expand), 1):
+        body = f"(SELECT {', '.join(items)} FROM {body} __s{k})"
     # the bbox rides through the explodes as FLAT doubles; the __bb struct is
     # rebuilt above the Generates (struct extraction over a top-level
     # named_struct folds in SimplifyExtractValueOps — pushing extraction
     # through Generate trips Catalyst's nested-column aliasing instead)
     return (
-        f"(SELECT * EXCEPT (__cx, __cy, __ix1, __iy1, __bbx0, __bby0, __bbx1, __bby1, __bbe), "
-        f"__cx * {grid.ny} + __cy AS __cell, "
+        f"(SELECT * EXCEPT (__bbx0, __bby0, __bbx1, __bby1, __bbe), "
         f"named_struct('xmin', __bbx0, 'ymin', __bby0, 'xmax', __bbx1, 'ymax', __bby1, "
-        f"'bbox_exact', __bbe) AS __bb FROM "
-        f"(SELECT __s3.*, explode(sequence(__s3.__iy0, __s3.__iy1)) AS __cy FROM "
-        f"(SELECT __s2.*, explode(sequence(__s2.__ix0, __s2.__ix1)) AS __cx FROM "
-        f"(SELECT *, {ix0} AS __ix0, {ix1} AS __ix1, {iy0} AS __iy0, {iy1} AS __iy1 FROM "
-        f"{flat} __s1) __s2) __s3) __s4)"
+        f"'bbox_exact', __bbe) AS __bb FROM {body} __s0)"
     )
 
 
@@ -681,6 +579,26 @@ _WITH_START_RE = re.compile(r"^\s*WITH\s+", re.IGNORECASE)
 _CTE_HEAD_RE = re.compile(r"\s*(?P<name>[A-Za-z_]\w*)\s+AS\s*\(", re.IGNORECASE)
 
 _outer_view_counter = itertools.count()
+
+
+def _close_paren(sql: str, i: int) -> Optional[int]:
+    """Index of the ``)`` closing the group whose body starts at ``i``, or
+    None when it never closes.  Literal/comment spans are skipped, so a
+    paren inside a string cannot end the group early."""
+    depth = 1
+    while i < len(sql):
+        kind, j = scan_noncode_span(sql, i)
+        if kind is not None:
+            i = j
+            continue
+        if sql[i] == "(":
+            depth += 1
+        elif sql[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return i
+        i += 1
+    return None
 
 
 def _parse_with_prefix(sql: str) -> tuple[str, list[str]]:
@@ -699,17 +617,10 @@ def _parse_with_prefix(sql: str) -> tuple[str, list[str]]:
         if not h:
             return "", []
         names.append(h.group("name"))
-        depth = 1
-        i = h.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = _close_paren(sql, h.end())
+        if close is None:
             return "", []
-        pos = i
+        pos = close + 1
         nxt = re.match(r"\s*,", sql[pos:])
         if nxt:
             pos += nxt.end()
@@ -736,111 +647,124 @@ def _resolve_relation(session, sql: str, name: str):
         return None
 
 
-def _meta_cols_exprs(meta):
+def _resolve_sides(session, sql: str, lt: str, lgeom: str, rt: str, rgeom: str):
+    """(left, right) DataFrames of the two join sides, or None when either
+    relation does not resolve or lacks its geometry column."""
+    ldf = _resolve_relation(session, sql, lt)
+    rdf = _resolve_relation(session, sql, rt)
+    if ldf is None or rdf is None or lgeom not in ldf.columns or rgeom not in rdf.columns:
+        return None
+    return ldf, rdf
+
+
+def _meta_bbox(meta) -> Optional[tuple]:
+    """A registered bbox (session.register_bbox) as the operator's box
+    operand; a non-exact registration carries its ``bbox_exact`` flag, so
+    the operator refines every pair instead of trusting the box."""
+    if meta is None:
+        return None
     from pyspark.sql import functions as F
 
-    return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
+    box = tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
+    return box if meta.exact else box + (F.lit(False),)
+
+
+def _both_exact(lmeta, rmeta) -> bool:
+    """Both sides registered bbox-exact: the JVM verdict IS the exact
+    predicate, and the refine stage is dropped."""
+    return lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact
 
 
 def _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta):
-    """Session-cached quantile grid sampled from the build (right) side,
-    falling back to the probe side when the build sample is empty."""
-    from dataclod_spark.operators.spatial_join import (
-        auto_cell_target,
-        collect_bbox_sample,
-        collect_bbox_sample_cols,
-        _Grid,
+    """The build (right) side's grid (``sample_grid``), cached on the
+    session per (relation, geometry column, cell budget)."""
+    from dataclod_spark.operators.spatial_join import sample_grid
+
+    key = (rt.lower(), rgeom.lower(), session.spatial_join_cells)
+    if key not in session._grid_cache:
+        session._grid_cache[key] = sample_grid(
+            rdf, rgeom, _meta_bbox(rmeta), ldf, lgeom, _meta_bbox(lmeta),
+            session.spatial_join_cells,
+        )
+    return session._grid_cache[key]
+
+
+def _operator_args(session, lt, lgeom, rt, rgeom, predicate, expand) -> dict:
+    """Keyword arguments of ``spatial_join`` for the routes that run the
+    DataFrame operator (outer and [NOT] EXISTS joins)."""
+    lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(rt, rgeom)
+    return dict(
+        left_geom=lgeom,
+        right_geom=rgeom,
+        distance=expand if predicate == "dwithin" else None,
+        cell_target=session.spatial_join_cells,
+        left_bbox=_meta_bbox(lmeta),
+        right_bbox=_meta_bbox(rmeta),
+        refine="none" if _both_exact(lmeta, rmeta) else "auto",
     )
 
-    cache_key = (rt.lower(), rgeom.lower(), session.spatial_join_cells)
-    grid = getattr(session, "_grid_cache", {}).get(cache_key)
-    if grid is not None:
-        return grid
-    if rmeta is not None:
-        sample = collect_bbox_sample_cols(rdf, _meta_cols_exprs(rmeta))
-    else:
-        sample = collect_bbox_sample(rdf, rgeom)
-    if not sample:
-        if lmeta is not None:
-            sample = collect_bbox_sample_cols(ldf, _meta_cols_exprs(lmeta))
-        else:
-            sample = collect_bbox_sample(ldf, lgeom)
-    if not sample:
-        sample = [(0.0, 0.0, 1.0, 1.0)]
-    cells = session.spatial_join_cells or auto_cell_target(sample)
-    grid = _Grid(sample, cells)
-    if hasattr(session, "_grid_cache"):
-        session._grid_cache[cache_key] = grid
-    return grid
 
+def _grid_join_sql(session, left, right, parsed, conjuncts, spatial_idx):
+    """(left relation, right relation, ON condition) SQL of the grid
+    equi-join replacing one spatial inner join.  ``left``/``right`` are
+    (table, alias, geometry column, DataFrame).  The ON condition is cell
+    equality, the operator's bbox overlap, reference-point dedup and
+    per-predicate bbox tightening, the NULL-masked exact refine, and any
+    extra user conjuncts."""
+    from dataclod_spark.operators.spatial_join import (
+        bbox_overlap_sql,
+        bbox_tighten_sql,
+        ref_point_sql,
+        split_shortfall,
+        verdict_sql,
+    )
 
-def _grid_on_parts(
-    la, ra, a1, c1, a2, c2, grid, e, pred_key, strict,
-    lmeta, rmeta, conjuncts, spatial_idx,
-) -> list[str]:
-    """ON-clause conjuncts of the grid equi-join: cell equality, bbox
-    overlap, reference-point dedup, predicate-specific bbox tightening, the
-    NULL-masked exact refine, and any extra user conjuncts."""
-    bb = lambda a, f: f"{a}.__bb.{f}"  # noqa: E731
+    lt, la, lgeom, ldf = left
+    rt, ra, rgeom, rdf = right
+    a1, c1, a2, c2, e, pred_key, strict = parsed
+    lmeta, rmeta = session.bbox_meta(lt, lgeom), session.bbox_meta(rt, rgeom)
+    grid = _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
+    lside = f"{_side_sql(lt, lgeom, grid, e, split_shortfall(ldf), lmeta)} {la}"
+    rside = f"{_side_sql(rt, rgeom, grid, 0.0, split_shortfall(rdf), rmeta)} {ra}"
+
+    def bb(a):
+        return tuple(f"{a}.__bb.{f}" for f in ("xmin", "ymin", "xmax", "ymax"))
+
     on_parts = [
         f"{la}.__cell = {ra}.__cell",
-        f"{bb(la,'xmin')} - {e!r} <= {bb(ra,'xmax')}",
-        f"{bb(ra,'xmin')} <= {bb(la,'xmax')} + {e!r}",
-        f"{bb(la,'ymin')} - {e!r} <= {bb(ra,'ymax')}",
-        f"{bb(ra,'ymin')} <= {bb(la,'ymax')} + {e!r}",
-        # reference-point dedup from the precomputed min cell indices —
-        # O(1) per pair (bucket is monotone, so the intersection corner's
-        # bucket is the max of the two sides' min indices)
-        f"(greatest({la}.__ix0, {ra}.__ix0) * {grid.ny}"
-        f" + greatest({la}.__iy0, {ra}.__iy0)) = {la}.__cell",
+        *bbox_overlap_sql(bb(la), bb(ra), e),
+        ref_point_sql(grid.ny, f"{la}.__i", f"{ra}.__i", f"{la}.__cell"),
     ]
     # predicate-direction bbox refs (a1 holds the predicate's 1st argument)
-    b1 = f"{a1}.__bb"
-    b2 = f"{a2}.__bb"
-    # necessary bbox tightening per predicate (any geometry)
-    if pred_key in ("within", "covered_by"):
-        on_parts.append(
-            f"({b2}.xmin <= {b1}.xmin AND {b1}.xmax <= {b2}.xmax "
-            f"AND {b2}.ymin <= {b1}.ymin AND {b1}.ymax <= {b2}.ymax)"
-        )
-    elif pred_key in ("contains", "covers"):
-        on_parts.append(
-            f"({b1}.xmin <= {b2}.xmin AND {b2}.xmax <= {b1}.xmax "
-            f"AND {b1}.ymin <= {b2}.ymin AND {b2}.ymax <= {b1}.ymax)"
-        )
-    elif pred_key == "equals":
-        on_parts.append(
-            f"({b1}.xmin = {b2}.xmin AND {b1}.xmax = {b2}.xmax "
-            f"AND {b1}.ymin = {b2}.ymin AND {b1}.ymax = {b2}.ymax)"
-        )
+    b1, b2 = bb(a1), bb(a2)
+    tight = bbox_tighten_sql(pred_key, b1, b2)
+    if tight is not None:
+        on_parts.append(tight)
 
     # the spatial conjunct itself: bbox-exact pairs (points / axis rects)
     # resolve with the pure-JVM verdict; only the rest cross into the ST_*
     # pandas UDF, with NULL-masked inputs so the batch carries no geometry
     # bytes for JVM-decided pairs (≈ the reference's point/rect refine fast
-    # paths; optimizer.rs keeps the predicate as the refine filter)
-    if pred_key == "bbox":
-        spatial_sql = None  # the bbox conjuncts ARE the predicate
-    elif lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact:
-        # both sides declared bbox-exact: the pure-JVM verdict IS the exact
-        # predicate — no refine stage, and (if unprojected) the geometry
-        # column is pruned from the scan entirely
-        spatial_sql = _verdict_sql(pred_key, b1, b2, e, strict)
-    else:
-        both = f"({bb(la,'bbox_exact')} AND {bb(ra,'bbox_exact')})"
-        verdict = _verdict_sql(pred_key, b1, b2, e, strict)
-        g1 = f"IF(NOT {both}, {a1}.`{c1}`, NULL)"
-        g2 = f"IF(NOT {both}, {a2}.`{c2}`, NULL)"
-        dm = _DIST_CMP_RE.match(conjuncts[spatial_idx])
-        if dm:
-            masked = f"ST_Distance({g1}, {g2}) {dm.group('op')} {dm.group('d')}"
+    # paths; optimizer.rs keeps the predicate as the refine filter).  For
+    # BBox_Intersects the bbox conjuncts ARE the predicate.
+    if pred_key != "bbox":
+        verdict = verdict_sql(pred_key, b1, b2, e, strict)
+        if _both_exact(lmeta, rmeta):
+            # no refine stage, and (if unprojected) the geometry column is
+            # pruned from the scan entirely
+            on_parts.append(verdict)
         else:
-            pm = _PRED_CALL_RE.match(conjuncts[spatial_idx])
-            extra = f", {pm.group('extra')}" if pm.group("extra") else ""
-            masked = f"{pm.group('fn')}({g1}, {g2}{extra})"
-        spatial_sql = f"IF({both}, {verdict}, coalesce({masked}, false))"
-    if spatial_sql is not None:
-        on_parts.append(spatial_sql)
+            both = f"({la}.__bb.bbox_exact AND {ra}.__bb.bbox_exact)"
+            g1 = f"IF(NOT {both}, {a1}.`{c1}`, NULL)"
+            g2 = f"IF(NOT {both}, {a2}.`{c2}`, NULL)"
+            dm = _DIST_CMP_RE.match(conjuncts[spatial_idx])
+            if dm:
+                masked = f"ST_Distance({g1}, {g2}) {dm.group('op')} {dm.group('d')}"
+            else:
+                pm = _PRED_CALL_RE.match(conjuncts[spatial_idx])
+                extra = f", {pm.group('extra')}" if pm.group("extra") else ""
+                masked = f"{pm.group('fn')}({g1}, {g2}{extra})"
+            on_parts.append(f"IF({both}, {verdict}, coalesce({masked}, false))")
     # any extra conjuncts ride along as join filters after the cell
     # equi-join — re-parenthesized: _split_top_and strips a conjunct's
     # wrapping parens, and an OR spliced bare into the AND-joined ON
@@ -848,7 +772,7 @@ def _grid_on_parts(
     on_parts.extend(
         f"({conjuncts[i]})" for i in range(len(conjuncts)) if i != spatial_idx
     )
-    return on_parts
+    return lside, rside, " AND ".join(on_parts)
 
 
 def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
@@ -883,53 +807,20 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
             break
     if parsed is None:
         return None
-    a1, c1, a2, c2, expand, pred_key, strict = parsed
+    a1, c1, a2, c2 = parsed[:4]
     aliases = {a1.lower(), a2.lower()}
     if aliases != {la.lower(), ra.lower()}:
         return None
     lgeom = c1 if a1.lower() == la.lower() else c2
     rgeom = c2 if a2.lower() == ra.lower() else c1
-
-    from pyspark.sql import functions as F
-
-    from dataclod_spark.operators.spatial_join import (
-        _Grid,
-        collect_bbox_sample,
-        collect_bbox_sample_cols,
-    )
-
-    rdf = _resolve_relation(session, sql, rt)
-    ldf = _resolve_relation(session, sql, lt)
-    if rdf is None or ldf is None:
+    sides = _resolve_sides(session, sql, lt, lgeom, rt, rgeom)
+    if sides is None:
         return None
-    if rgeom not in rdf.columns or lgeom not in ldf.columns:
-        return None
-    # registered bbox expressions (session.register_bbox): bbox pass and
-    # grid sampling become pure JVM on that side
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_cols(meta):
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
-    grid = _get_grid(session, rt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
-
-    # parallelism guard (mirrors the DataFrame operator): repartition a
-    # single-split local source up to the cluster's parallelism
-    par = session.spark.sparkContext.defaultParallelism
-    lpar = par if ldf.rdd.getNumPartitions() < par else None
-    rpar = par if rdf.rdd.getNumPartitions() < par else None
-
-    e = float(expand)
-    on_parts = _grid_on_parts(
-        la, ra, a1, c1, a2, c2, grid, e, pred_key, strict,
-        lmeta, rmeta, conjuncts, spatial_idx,
+    ldf, rdf = sides
+    lside, rside, on_sql = _grid_join_sql(
+        session, (lt, la, lgeom, ldf), (rt, ra, rgeom, rdf), parsed, conjuncts, spatial_idx
     )
-    new_from = (
-        f"FROM {_side_sql(lt, lgeom, grid, e, lpar, lmeta)} {la} "
-        f"JOIN {_side_sql(rt, rgeom, grid, 0.0, rpar, rmeta)} {ra} "
-        f"ON {' AND '.join(on_parts)} "
-    )
+    new_from = f"FROM {lside} JOIN {rside} ON {on_sql} "
     # the derived sides carry internal __cell/__bb columns: stars in the
     # outer select list must expand to the ORIGINAL columns or the result
     # schema silently changes.  A bare `*` is only expandable when the two
@@ -937,11 +828,7 @@ def try_rewrite_spatial_join(session, sql: str) -> Optional[str]:
     # after the rewritten ON, [lsql, rsql] would drop the later relations'
     # columns — decline and let default planning keep the schema.
     lsql, rsql = _cols_sql(la, ldf.columns), _cols_sql(ra, rdf.columns)
-    tail_has_join = re.match(
-        r"\s*(?:(?:LEFT|RIGHT|FULL|INNER|CROSS)\s+(?:OUTER\s+)?)?JOIN\b",
-        sql[on_end:],
-        re.IGNORECASE,
-    )
+    tail_has_join = _TAIL_JOIN_RE.match(sql, on_end)
     prefix = _expand_select_stars(
         sql[: m.start()],
         {la.lower(): lsql, ra.lower(): rsql},
@@ -1010,7 +897,7 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
             p = _match_spatial_conjunct(c)
             if p is None:
                 continue
-            a1, c1, a2, c2, expand, pred_key, strict = p
+            a1, c1, a2, c2 = p[:4]
             pair = {a1.lower(), a2.lower()}
             if ja.lower() not in pair:
                 continue
@@ -1022,30 +909,16 @@ def try_chain_spatial_join(session, sql: str) -> Optional[str]:
             lt, la, lrel_span = rels[la_idx][0], rels[la_idx][1], rels[la_idx][2]
             lgeom = c1 if a1.lower() == la.lower() else c2
             rgeom = c2 if a2.lower() == ra.lower() else c1
-            ldf = _resolve_relation(session, sql, lt)
-            rdf = _resolve_relation(session, sql, jt)
-            if ldf is None or rdf is None:
+            sides = _resolve_sides(session, sql, lt, lgeom, jt, rgeom)
+            if sides is None:
                 return None
-            if lgeom not in ldf.columns or rgeom not in rdf.columns:
-                return None
-            lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-            rmeta = session.bbox_meta(jt, rgeom) if hasattr(session, "bbox_meta") else None
-            grid = _get_grid(session, jt, rgeom, rdf, rmeta, ldf, lgeom, lmeta)
-            par = session.spark.sparkContext.defaultParallelism
-            lpar = par if ldf.rdd.getNumPartitions() < par else None
-            rpar = par if rdf.rdd.getNumPartitions() < par else None
-            e = float(expand)
-            on_parts = _grid_on_parts(
-                la, ra, a1, c1, a2, c2, grid, e, pred_key, strict,
-                lmeta, rmeta, conjuncts, si,
+            ldf, rdf = sides
+            lside, rside, on_sql = _grid_join_sql(
+                session, (lt, la, lgeom, ldf), (jt, ra, rgeom, rdf), p, conjuncts, si
             )
             # splice: both relation texts swapped for their exploded forms,
             # the spatial ON replaced, everything else verbatim
-            pieces = [
-                (lrel_span, f"{_side_sql(lt, lgeom, grid, e, lpar, lmeta)} {la}"),
-                (jrel_span, f"{_side_sql(jt, rgeom, grid, 0.0, rpar, rmeta)} {ra}"),
-                (jon_span, " AND ".join(on_parts) + " "),
-            ]
+            pieces = [(lrel_span, lside), (jrel_span, rside), (jon_span, on_sql + " ")]
             pieces.sort(key=lambda pr: pr[0][0])
             out, cur = [], 0
             for (s0, s1), txt in pieces:
@@ -1234,12 +1107,10 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
     else:
         lgeom, rgeom, predicate = c2, c1, _SWAPPED[pred_key]
 
-    ldf = _resolve_relation(session, sql, lt)
-    rdf = _resolve_relation(session, sql, rt)
-    if ldf is None or rdf is None:
+    sides = _resolve_sides(session, sql, lt, lgeom, rt, rgeom)
+    if sides is None:
         return None
-    if lgeom not in ldf.columns or rgeom not in rdf.columns:
-        return None
+    ldf, rdf = sides
     extra_cond = None
     if extra:
         lcols_set, rcols_set = set(ldf.columns), set(rdf.columns)
@@ -1251,23 +1122,7 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
             mapped_parts.append(f"({mc})")
         extra_cond = " AND ".join(mapped_parts)
 
-    from pyspark.sql import functions as F
-
     from dataclod_spark.operators.spatial_join import spatial_join
-
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_bbox(meta):
-        if meta is None:
-            return None
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
-    refine = (
-        "none"
-        if (lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact)
-        else "auto"
-    )
 
     lcols = set(ldf.columns)
 
@@ -1288,11 +1143,7 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
         f"`{m_}` AS `{c}`" if (m_ := _map_ref(ra, c)) != c else f"`{c}`"
         for c in rdf.columns
     )
-    tail_has_join = re.match(
-        r"\s*(?:(?:LEFT|RIGHT|FULL|INNER|CROSS)\s+(?:OUTER\s+)?)?JOIN\b",
-        sql[on_end:],
-        re.IGNORECASE,
-    )
+    tail_has_join = _TAIL_JOIN_RE.match(sql, on_end)
     prefix = _expand_select_stars(
         sql[: m.start()],
         {la.lower(): star_l, ra.lower(): star_r},
@@ -1305,15 +1156,9 @@ def try_outer_spatial_join(session, sql: str) -> Optional[str]:
         ldf,
         rdf,
         predicate,
-        left_geom=lgeom,
-        right_geom=rgeom,
         how=how,
-        distance=(expand if predicate == "dwithin" else None),
-        cell_target=getattr(session, "spatial_join_cells", None),
-        left_bbox=_meta_bbox(lmeta),
-        right_bbox=_meta_bbox(rmeta),
-        refine=refine,
         extra_condition=extra_cond,
+        **_operator_args(session, lt, lgeom, rt, rgeom, predicate, expand),
     )
     view = f"__spatial_outer_join_{next(_outer_view_counter)}"
     joined.createOrReplaceTempView(view)
@@ -1390,18 +1235,10 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
         la = lt  # no alias: the subquery correlates by table name
     elif la.lower() in _RESERVED_ALIAS:
         return None
-    # balanced-paren scan for the subquery body
-    depth = 1
-    i = m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = _close_paren(sql, m.end())
+    if close is None:
         return None
-    sub, sub_end = sql[m.end() : i - 1], i
+    sub, sub_end = sql[m.end() : close], close + 1
     sm = _EXISTS_SUB_RE.match(sub)
     if not sm:
         return None
@@ -1429,12 +1266,10 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
     else:
         lgeom, rgeom, predicate = c2, c1, _SWAPPED[pred_key]
 
-    ldf = _resolve_relation(session, sql, lt)
-    rdf = _resolve_relation(session, sql, rt)
-    if ldf is None or rdf is None:
+    sides = _resolve_sides(session, sql, lt, lgeom, rt, rgeom)
+    if sides is None:
         return None
-    if lgeom not in ldf.columns or rgeom not in rdf.columns:
-        return None
+    ldf, rdf = sides
 
     # classify non-spatial conjuncts: inner-only refs become a pre-filter
     # on the inner side (cheapest); conjuncts correlating the outer alias
@@ -1478,7 +1313,7 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
 
     from pyspark.sql import functions as F
 
-    from dataclod_spark.operators.spatial_join import spatial_join
+    from dataclod_spark.operators.spatial_join import rowid_sql, spatial_join
 
     for flt in right_filters:
         try:
@@ -1486,38 +1321,16 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
         except Exception:
             return None
 
-    lmeta = session.bbox_meta(lt, lgeom) if hasattr(session, "bbox_meta") else None
-    rmeta = session.bbox_meta(rt, rgeom) if hasattr(session, "bbox_meta") else None
-
-    def _meta_bbox(meta):
-        if meta is None:
-            return None
-        return tuple(F.expr(x) for x in (meta.xmin, meta.ymin, meta.xmax, meta.ymax))
-
-    refine = (
-        "none"
-        if (lmeta is not None and lmeta.exact and rmeta is not None and rmeta.exact)
-        else "auto"
-    )
-    common = dict(
-        left_geom=lgeom,
-        right_geom=rgeom,
-        distance=(expand if predicate == "dwithin" else None),
-        cell_target=getattr(session, "spatial_join_cells", None),
-        left_bbox=_meta_bbox(lmeta),
-        right_bbox=_meta_bbox(rmeta),
-        refine=refine,
-    )
+    common = _operator_args(session, lt, lgeom, rt, rgeom, predicate, expand)
     how = "left_anti" if neg else "left_semi"
     if not correlated_filters:
         joined = spatial_join(ldf, rdf, predicate, how=how, **common)
     else:
         # correlated extras join the semi/anti condition itself: run the
         # inner grid join, apply them post-join, then semi/anti the outer
-        # side on the operator's deterministic row-id convention (two
-        # xxhash64 seeds over the natural columns — recompute-stable,
-        # identical rows share a verdict, which is exactly semi/anti
-        # semantics)
+        # side on the operator's row ids (``rowid_sql`` over the natural
+        # columns — recompute-stable, identical rows share a verdict, which
+        # is exactly semi/anti semantics)
         inner = spatial_join(ldf, rdf, predicate, how="inner", **common)
         overlap = set(ldf.columns) & set(rdf.columns)
 
@@ -1536,23 +1349,12 @@ def try_exists_spatial_join(session, sql: str) -> Optional[str]:
             + ")"
             for c in correlated_filters
         )
-
-        def _rowid(df):
-            cols = [F.col(c) for c in ldf.columns]
-            return F.struct(
-                F.xxhash64(*cols).alias("h1"),
-                F.xxhash64(F.lit(0x9E3779B9), *cols).alias("h2"),
-            )
-
+        rowid = F.expr(rowid_sql(ldf.columns))
         try:
-            matched = inner.where(flt).select(_rowid(inner).alias("__eid")).distinct()
+            matched = inner.where(flt).select(rowid.alias("__eid")).distinct()
         except Exception:
             return None
-        joined = (
-            ldf.withColumn("__eid", _rowid(ldf))
-            .join(matched, "__eid", how)
-            .drop("__eid")
-        )
+        joined = ldf.withColumn("__eid", rowid).join(matched, "__eid", how).drop("__eid")
     view = f"__spatial_semi_join_{next(_outer_view_counter)}"
     joined.createOrReplaceTempView(view)
 
@@ -1671,8 +1473,9 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
     # matches that sit outside every (SELECT ...) span
     sub_spans = _subquery_spans(sql)
 
-    from dataclod_spark.geo.core import wkt_parse
     from dataclod_spark.geo.algos import bounds as gbounds
+    from dataclod_spark.geo.core import wkt_parse
+    from dataclod_spark.operators.spatial_join import verdict_sql
 
     changed = False
 
@@ -1699,7 +1502,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
             return orig
         if al is not None and (alias is None or al.lower() != alias.lower()):
             return orig
-        meta = session.bbox_meta(table, col) if hasattr(session, "bbox_meta") else None
+        meta = session.bbox_meta(table, col)
         if meta is None:
             return orig
         try:
@@ -1735,7 +1538,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
         # the literal is an axis rectangle → the shared JVM verdict IS the
         # predicate (NOT the closed-interval covering conjuncts alone:
         # ST_Within is false for a point ON the boundary, so within/
-        # contains need _verdict_sql's open-interval point cases).  The
+        # contains need verdict_sql's open-interval point cases).  The
         # simple covering conjuncts still ride along — they are the part
         # that reaches the parquet scan as PushedFilters.
         if (
@@ -1743,7 +1546,7 @@ def try_spatial_filter_pushdown(session, sql: str) -> Optional[str]:
             and _axis_rect_bounds(lit) is not None
             and key in ("intersects", "within", "covered_by", "contains", "covers")
         ):
-            verdict = _verdict_sql_fields(
+            verdict = verdict_sql(
                 key,
                 (f"({cx0})", f"({cy0})", f"({cx1})", f"({cy1})"),
                 (f"{x0!r}", f"{y0!r}", f"{x1!r}", f"{y1!r}"),

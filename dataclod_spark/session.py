@@ -178,11 +178,15 @@ class EngineSession:
         # statistics (operators.spatial_join.auto_cell_target) ≈ the
         # reference sizing partitions from collected GeoStatistics
         self.spatial_join_cells: int | None = None
-        # (table, geom_col, cells) -> _Grid: skips the bbox sampling pass on
-        # repeated SQL spatial joins over the same relation (the reference
-        # re-derives per query; safe to cache — a stale grid only affects
-        # cell balance, never correctness, since out-of-extent bboxes clamp
-        # to border cells).  Cleared with clear_spatial_grid_cache().
+        # (table, geom_col, cells) -> grid of the SQL-dispatched spatial
+        # join's build side.  The grid is built by
+        # operators.spatial_join.sample_grid (the one definition both join
+        # entry points use); plans/spatial_dispatch._get_grid caches it here
+        # so repeated SQL spatial joins over the same relation skip the bbox
+        # sampling job (the reference re-derives per query; safe to cache —
+        # a stale grid only affects cell balance, never correctness, since
+        # out-of-extent bboxes clamp to border cells).  Cleared with
+        # clear_spatial_grid_cache().
         self._grid_cache: dict[tuple[str, str, int], object] = {}
         # view -> (geom_col -> _BBoxMeta): registered bbox expressions for
         # SQL spatial-join dispatch (see register_bbox).

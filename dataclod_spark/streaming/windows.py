@@ -7,7 +7,7 @@ DataFrame with an event-time column and returns the transformed frame; the
 batch twins of these operators are oracle-checked in
 ``dataclod_spark.queries.events``.
 
-* tumbling / sliding window aggregation: ``F.window`` + watermark
+* tumbling window aggregation: ``F.window`` + watermark
 * session windows: ``F.session_window`` (gap-based, Spark-native)
 * custom stateful ops would ride ``applyInPandasWithState`` — not needed
   for reference parity.
@@ -37,21 +37,6 @@ def tumbling_agg(
     src = with_watermark(df, ts_col, watermark)
     aggs = list(aggs) or [F.count(F.lit(1)).alias("n_events")]
     return src.groupBy(F.window(ts_col, window).alias("win"), *keys).agg(*aggs)
-
-
-def sliding_agg(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    ts_col: str = "ts",
-    keys: Sequence[str] = ("event_type",),
-    aggs: Sequence[Column] = (),
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sliding-window grouped aggregation."""
-    src = with_watermark(df, ts_col, watermark)
-    aggs = list(aggs) or [F.count(F.lit(1)).alias("n_events")]
-    return src.groupBy(F.window(ts_col, window, slide).alias("win"), *keys).agg(*aggs)
 
 
 def session_agg(

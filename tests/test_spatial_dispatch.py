@@ -158,23 +158,29 @@ def test_full_outer_sql_dispatch(engine, sdata):
 
 
 def test_cte_sql_dispatch(engine, sdata):
+    """Inner and LEFT joins against a CTE.  The LEFT form's CTE body
+    carries a ``')'`` string literal: the CTE scan must skip literals, or
+    the CTE does not resolve and the outer join (a Python UDF in its ON
+    clause) cannot be planned at all."""
     boxes, points = sdata
-    df = engine.sql(
-        "WITH even_boxes AS (SELECT * FROM disp_boxes WHERE bid % 2 = 0) "
-        "SELECT p.pid, b.bid FROM disp_pts p JOIN even_boxes b "
-        "ON ST_Intersects(p.geom, b.geom)"
-    )
-    got = {(r.pid, r.bid) for r in df.collect()}
-    want = {
+    inner = {
         (pi, bi)
         for pi, pg in points
         for bi, bg in boxes
         if bi % 2 == 0 and GP.intersects(pg, bg)
     }
-    assert got == want and got
-    plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "__cell" in plan
+    left = inner | {(pi, None) for pi, _ in points if pi not in {p for p, _ in inner}}
+    for lit, join, want in (("", "JOIN", inner), (", ')' AS s", "LEFT JOIN", left)):
+        df = engine.sql(
+            f"WITH even_boxes AS (SELECT *{lit} FROM disp_boxes WHERE bid % 2 = 0) "
+            f"SELECT p.pid, b.bid FROM disp_pts p {join} even_boxes b "
+            "ON ST_Intersects(p.geom, b.geom)"
+        )
+        got = {(r.pid, r.bid) for r in df.collect()}
+        assert got == want and got
+        plan = _plan(df)
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "__cell" in plan
 
 
 def test_bbox_metadata_dispatch_prunes_python(engine, sdata):
@@ -249,33 +255,41 @@ def test_multi_join_spatial_first_dispatch(engine, sdata):
     assert "__cell" in plan
 
 
+# the EXISTS tests' extra input: an always-true inner conjunct whose string
+# literal holds a ')' — the subquery scan must skip literals or it ends the
+# EXISTS body early
+_PAREN_LITERAL = ("", " AND CAST(b.bid AS STRING) <> ')'")
+
+
 def test_exists_semi_sql_dispatch(engine, sdata):
     """Correlated spatial EXISTS → grid left-semi join (reference
     exec.rs:47-131 semi join type; optimizer.rs rewrites decorrelated
     ExistenceJoins too)."""
     boxes, points = sdata
-    df = engine.sql(
-        "SELECT p.pid FROM disp_pts p WHERE EXISTS "
-        "(SELECT 1 FROM disp_boxes b WHERE ST_Intersects(p.geom, b.geom))"
-    )
-    got = {r.pid for r in df.collect()}
     want = {pi for pi, pg in points if any(GP.intersects(pg, bg) for _, bg in boxes)}
-    assert got == want and got
-    plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "__cell" in plan
+    for extra in _PAREN_LITERAL:
+        df = engine.sql(
+            "SELECT p.pid FROM disp_pts p WHERE EXISTS "
+            f"(SELECT 1 FROM disp_boxes b WHERE ST_Intersects(p.geom, b.geom){extra})"
+        )
+        got = {r.pid for r in df.collect()}
+        assert got == want and got
+        plan = _plan(df)
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "__cell" in plan
 
 
 def test_not_exists_anti_sql_dispatch(engine, sdata):
     boxes, points = sdata
-    df = engine.sql(
-        "SELECT p.pid FROM disp_pts p WHERE NOT EXISTS "
-        "(SELECT 1 FROM disp_boxes b WHERE ST_Contains(b.geom, p.geom))"
-    )
-    got = {r.pid for r in df.collect()}
     want = {pi for pi, pg in points if not any(GP.contains(bg, pg) for _, bg in boxes)}
-    assert got == want and got
-    assert "BroadcastNestedLoopJoin" not in _plan(df)
+    for extra in _PAREN_LITERAL:
+        df = engine.sql(
+            "SELECT p.pid FROM disp_pts p WHERE NOT EXISTS "
+            f"(SELECT 1 FROM disp_boxes b WHERE ST_Contains(b.geom, p.geom){extra})"
+        )
+        got = {r.pid for r in df.collect()}
+        assert got == want and got
+        assert "BroadcastNestedLoopJoin" not in _plan(df)
 
 
 def test_exists_right_filter_and_outer_tail(engine, sdata):
@@ -875,3 +889,36 @@ def test_backticked_alias_star_and_literal_blindness(engine, sdata):
     )
     assert df.count() > 0
     assert "BroadcastNestedLoopJoin" not in _plan(df)
+
+
+def test_non_exact_registered_bbox_outer_and_exists(engine):
+    """A bbox registered WITHOUT exact=True must keep the exact refine on
+    the routes that run the DataFrame operator (outer joins, EXISTS): a
+    point inside the triangle's bbox but outside the triangle is no
+    match."""
+    spark = engine.spark
+    tri = GC.Geometry(GC.POLYGON, [[(0.0, 0.0), (4.0, 0.0), (0.0, 4.0), (0.0, 0.0)]])
+    pts = [(i, make_point(x, y)) for i, (x, y) in enumerate([(1, 1), (3, 3), (0.5, 3), (3.5, 0.2)])]
+    spark.createDataFrame(
+        [(i, GC.wkb_write(g)) for i, g in pts], _SCHEMA
+    ).withColumnRenamed("id", "pid").createOrReplaceTempView("nonexact_pts")
+    spark.createDataFrame(
+        [(0, GC.wkb_write(tri), 0.0, 0.0, 4.0, 4.0)],
+        "tid long, geom binary, x0 double, y0 double, x1 double, y1 double",
+    ).createOrReplaceTempView("nonexact_tri")
+    engine.register_bbox("nonexact_tri", "geom", "x0", "y0", "x1", "y1")
+    inside = {i for i, g in pts if GP.intersects(g, tri)}
+    assert inside and inside != {i for i, _ in pts}
+    df = engine.sql(
+        "SELECT p.pid, t.tid FROM nonexact_pts p LEFT JOIN nonexact_tri t "
+        "ON ST_Intersects(p.geom, t.geom)"
+    )
+    assert {(r.pid, r.tid) for r in df.collect()} == {
+        (i, 0 if i in inside else None) for i, _ in pts
+    }
+    df = engine.sql(
+        "SELECT p.pid FROM nonexact_pts p WHERE EXISTS "
+        "(SELECT 1 FROM nonexact_tri t WHERE ST_Intersects(p.geom, t.geom))"
+    )
+    assert {r.pid for r in df.collect()} == inside
+    assert "__cell" in _plan(df)

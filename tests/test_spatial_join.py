@@ -10,7 +10,7 @@ from pyspark.sql import types as T
 
 from dataclod_spark.geo import core as GC
 from dataclod_spark.geo import predicates as GP
-from dataclod_spark.geo.algos import make_envelope, make_point
+from dataclod_spark.geo.algos import distance, make_envelope, make_point
 
 
 def _mk_data(seed: int, n_boxes: int = 40, n_points: int = 120):
@@ -437,3 +437,104 @@ def test_extra_condition_overlap_renamed_columns(spark, data):
         | {(None, bi) for bi, _ in boxes if bi not in mb}
     )
     assert got_pairs == want
+
+
+def test_nonfinite_grid_bounds_both_entry_points(spark, engine):
+    """A build side with +inf coordinates puts +Infinity among the sampled
+    grid boundaries: the DataFrame operator and the SQL dispatch must both
+    spell it as a SQL literal and stay brute-force exact.  A distance whose
+    square overflows a double (1e200) must neither break the generated
+    SQL nor turn the pairs at infinity into matches."""
+    from dataclod_spark.operators.spatial_join import spatial_join
+
+    inf = float("inf")
+    build = [(i, make_point(float(i), float(i))) for i in range(40)]
+    build += [(40 + i, make_point(inf, float(i))) for i in range(40)]
+    probe = [(i, make_point(float(i), float(i))) for i in range(40)]
+    pdf = _df(spark, probe).withColumnRenamed("id", "pid")
+    bdf = _df(spark, build).withColumnRenamed("id", "bid")
+    pdf.createOrReplaceTempView("nonfinite_a")
+    bdf.createOrReplaceTempView("nonfinite_b")
+    cases = [
+        ("intersects", None, "ST_Intersects(a.geom, b.geom)", GP.intersects),
+        ("dwithin", 1e200, "ST_DWithin(a.geom, b.geom, 1e200)",
+         lambda p, b: distance(p, b) <= 1e200),
+    ]
+    for predicate, d, on, pred in cases:
+        want = _brute_pairs(probe, build, pred)
+        assert want
+        op = spatial_join(pdf, bdf, predicate, distance=d)
+        assert {(r.pid, r.bid) for r in op.collect()} == want, predicate
+        sql = engine.sql(
+            f"SELECT a.pid, b.bid FROM nonfinite_a a JOIN nonfinite_b b ON {on}"
+        )
+        assert {(r.pid, r.bid) for r in sql.collect()} == want, on
+        assert "__cell" in sql._jdf.queryExecution().executedPlan().toString()
+
+
+def _lattice():
+    """Points and axis rectangles on a 4x4 integer lattice — points on
+    rectangle edges and corners, rectangles sharing edges, equal pairs in
+    a self-join — plus one triangle, whose pairs take the refine path."""
+    geoms = [make_point(float(x), float(y)) for x in range(4) for y in range(4)]
+    geoms += [
+        make_envelope(float(x0), float(y0), float(x1), float(y1))
+        for x0 in range(4)
+        for x1 in range(x0 + 1, 4)
+        for y0 in range(4)
+        for y1 in range(y0 + 1, 4)
+    ]
+    geoms.append(GC.Geometry(GC.POLYGON, [[(0.0, 0.0), (3.0, 0.0), (0.0, 3.0), (0.0, 0.0)]]))
+    return list(enumerate(geoms))
+
+
+@pytest.fixture(scope="module")
+def lattice(spark):
+    rows = _lattice()
+    adf = _df(spark, rows).withColumnRenamed("id", "aid")
+    bdf = _df(spark, rows).withColumnRenamed("id", "bid")
+    adf.createOrReplaceTempView("lattice_a")
+    bdf.createOrReplaceTempView("lattice_b")
+    return rows, adf, bdf
+
+
+# (operator predicate or None for SQL-only, SQL ON clause, reference)
+_VERDICT_CASES = [
+    ("intersects", "ST_Intersects(a.geom, b.geom)", GP.intersects),
+    ("contains", "ST_Contains(a.geom, b.geom)", GP.contains),
+    ("within", "ST_Within(a.geom, b.geom)", GP.within),
+    ("covers", "ST_Covers(a.geom, b.geom)", GP.covers),
+    ("covered_by", "ST_CoveredBy(a.geom, b.geom)", GP.covered_by),
+    ("touches", "ST_Touches(a.geom, b.geom)", GP.touches),
+    ("overlaps", "ST_Overlaps(a.geom, b.geom)", GP.overlaps),
+    ("equals", "ST_Equals(a.geom, b.geom)", GP.equals),
+    ("crosses", "ST_Crosses(a.geom, b.geom)", GP.crosses),
+    ("dwithin", "ST_DWithin(a.geom, b.geom, 1.0)", lambda a, b: GP.dwithin(a, b, 1.0)),
+    (None, "BBox_Intersects(a.geom, b.geom)", GP.bbox_intersects),
+    (None, "ST_Distance(a.geom, b.geom) < 1.0", lambda a, b: distance(a, b) < 1.0),
+]
+
+
+@pytest.mark.parametrize(
+    "predicate,on,pred", _VERDICT_CASES, ids=[c[0] or c[1].split("(")[0] for c in _VERDICT_CASES]
+)
+def test_bbox_exact_verdict_every_predicate(spark, engine, lattice, predicate, on, pred):
+    """The JVM verdict for bbox-exact pairs (points / axis rectangles) agrees
+    with the exact predicate on every join predicate, through the
+    DataFrame operator and through the SQL dispatch; the triangle's pairs
+    run the NULL-masked refine beside it."""
+    from dataclod_spark.operators.spatial_join import spatial_join
+
+    rows, adf, bdf = lattice
+    want = _brute_pairs(rows, rows, pred)
+    # crosses is false for every pair of points and areas (OGC)
+    assert bool(want) == (predicate != "crosses")
+    if predicate is not None:
+        op = spatial_join(
+            adf, bdf, predicate, distance=1.0 if predicate == "dwithin" else None,
+            cell_target=16,
+        )
+        assert {(r.aid, r.bid) for r in op.collect()} == want
+    sql = engine.sql(f"SELECT a.aid, b.bid FROM lattice_a a JOIN lattice_b b ON {on}")
+    assert {(r.aid, r.bid) for r in sql.collect()} == want
+    assert "__cell" in sql._jdf.queryExecution().executedPlan().toString()
